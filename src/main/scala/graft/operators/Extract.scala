@@ -2,28 +2,28 @@ package graft.operators
 
 import graft._
 import graft.functions.Charset
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** The distributed extraction pipeline (SURVEY.md §3.2): scan → per-row
-  * tokenize (typed flatMap, the one legitimately procedural stage) → pure
-  * Catalyst column expressions / window functions / ordered aggregations for
-  * everything else (classification J1/W4/W5, line merge W2/W3/A1, document
-  * assembly A2). The semantics are normatively defined in
-  * [[graft.operators.Classify]]; golden tests assert byte-identical equality
-  * per url between this pipeline and the scalar oracle under any partitioning.
+/** Extraction over a pages table, in two forms that must agree per page
+  * (SURVEY.md §3.2):
   *
-  * Shuffle plan (deliberate, scale-first; pinned by the plan-shape test):
-  * two consumer branches (sentinel metadata / classification+assembly),
-  * each with exactly ONE url-hash Exchange whose input Catalyst has
-  * branch-filtered — sentinels shuffle 1 tiny row/page, classification
-  * shuffles candidate blocks; every window/agg inside a branch reuses that
-  * branch's partitioning, and the final metadata join is co-partitioned.
-  * See the comment in [[extract]] + BASELINE.md for the measured
-  * alternatives (exchange reuse, fused no-join) and why they lost.
+  *   - [[extract]], the production path: a partition-local map of the
+  *     per-page function [[graft.operators.ScalarExtract.extract]] — one scan,
+  *     no exchange, no sort, no join. Every step of the detect → order →
+  *     recognize → assemble flow is per-document work, so a relational plan
+  *     that shuffles blocks by url buys no parallelism.
+  *   - the windowed relational chain [[toRows]] → [[classifiedBlocks]] →
+  *     [[lines]] → [[assembled]]: the same semantics as Catalyst window
+  *     functions and ordered aggregations over one url-hash exchange. It is
+  *     the SQL-checkable second implementation behind the `ex_classify`,
+  *     `ex_lines` and `ex_docs` contract queries, and the golden tests assert
+  *     it equals [[extract]] per url.
+  *
+  * The semantics are normatively defined in [[graft.operators.Classify]].
   * An optional pages-level salted repartition (`saltedPages`) balances
-  * tokenizer work when the input file layout is host-skewed (B:14).
+  * per-page work when the input file layout is host-skewed (B:14).
   */
 object Extract {
 
@@ -86,8 +86,8 @@ object Extract {
 
   /** The unified reading-order keys (HTML: document order; PDF: page, -y, x,
     * seq), materialized as columns so every downstream window shares one
-    * sort. ONE definition — [[classifyCandidates]] (production) and the
-    * [[lines]] fallback (oracle path) must never drift on row order.
+    * sort. ONE definition — [[classifiedBlocks]] and the [[lines]] fallback
+    * must never drift on row order.
     */
   private def withOrdKeys(df: DataFrame): DataFrame = {
     val isPdf = col("kind") === Charset.KIND_PDF
@@ -98,22 +98,14 @@ object Extract {
   }
 
   /** Blocks DataFrame with all classification columns (the SQL-expressible
-    * middle of the pipeline — also materialized for the DuckDB oracle).
+    * middle of the windowed chain — also materialized for the DuckDB oracle):
+    * one url-hash exchange, sentinel and boilerplate rows filtered out.
     */
-  def classifiedBlocks(rows: Dataset[BlockRow]): DataFrame =
-    classifiedFrom(rows.toDF.repartition(col("url")))
-
-  /** Classification over a blocks frame with sentinel/boiler rows still
-    * present (oracle path).
-    */
-  private[graft] def classifiedFrom(parted: DataFrame): DataFrame = {
+  def classifiedBlocks(rows: Dataset[BlockRow]): DataFrame = {
     val sentinelFlag = (col("flags").bitwiseAND(lit(Model.FLAG_SENTINEL))) =!= 0
     val boiler = (col("flags").bitwiseAND(lit(Model.FLAG_BOILER))) =!= 0
-    classifyCandidates(parted.filter(!sentinelFlag && !boiler))
-  }
+    val cand = rows.toDF.repartition(col("url")).filter(!sentinelFlag && !boiler)
 
-  /** Classification over candidate rows only. */
-  private[graft] def classifyCandidates(cand: DataFrame): DataFrame = {
     val isHtml = col("kind") === Charset.KIND_HTML
     val isPdf = col("kind") === Charset.KIND_PDF
 
@@ -130,7 +122,7 @@ object Extract {
     // `_w` columns per Window node, which defeats ordering reuse — with
     // attribute keys, every reading-order window downstream (smoothing
     // here, line-break + lineId in [[lines]]) is satisfied by ONE sort.
-    // Plan effect: the classify branch runs 2 full-width sorts (parentSeq
+    // Plan effect: the windowed chain runs 2 full-width sorts (parentSeq
     // scoring + reading order) instead of 5 (pinned by the plan test).
     val wSeq = Window.partitionBy("url")
       .orderBy(col("ord0").asc, col("ord1").asc, col("ord2").asc, col("ord3").asc)
@@ -185,8 +177,8 @@ object Extract {
   def lines(classified: DataFrame): DataFrame = {
     val isPdf = col("kind") === Charset.KIND_PDF
     // Reuse the materialized reading-order keys when the input comes from
-    // [[classifyCandidates]] (the production path — keeps every window here
-    // on the ordering its sort already produced); compute them otherwise.
+    // [[classifiedBlocks]] (keeps every window here on the ordering its sort
+    // already produced); compute them otherwise.
     val withOrd =
       if (classified.columns.contains("ord0")) classified
       else withOrdKeys(classified)
@@ -269,100 +261,17 @@ object Extract {
       .select("url", "atext", "aspans", "keptRows")
   }
 
-  /** Tokenizer output as a DataFrame — either the typed flatMap or the
-    * native Generator ([[graft.functions.ExtractBlocks]]); both are
-    * row-identical (equivalence-tested). The Generator path skips Page
-    * materialization and the output encoder; selectable for benchmarking
-    * via -Dgraft.extract.generator=true.
+  /** Full pipeline: Dataset[Page] → Dataset[ExtractedDoc], one output row per
+    * INPUT PAGE, equal to [[ScalarExtract.extract]] of that page. The map is
+    * partition-local: it keeps the input's partitioning and adds no exchange.
+    *
+    * Pages are never merged by url: two input pages that share a url (say,
+    * two recrawls with different `warc_ts`) yield two rows, each extracted
+    * from its own payload. (The windowed chain groups by url, so it merges
+    * such pages; it is only compared with this path on unique urls.)
     */
-  private def blockFrame(pages: Dataset[Page]): DataFrame = {
+  def extract(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
     import pages.sparkSession.implicits._
-    if (sys.props.get("graft.extract.generator").contains("true"))
-      pages.toDF.select(col("url"), col("warc_ts"), col("lang"),
-        graft.functions.ExtractBlocks.expr(col("html")))
-    else pages.flatMap(toRows).toDF
-  }
-
-  /** Full pipeline: Dataset[Page] → Dataset[ExtractedDoc]. */
-  def extract(pages: Dataset[Page]): Dataset[ExtractedDoc] =
-    extract(pages, sys.props.getOrElse("graft.extract.materialize", "none"))
-
-  /** `materialize` selects how the two consumer branches share the tokenizer
-    * output (measured head-to-head by `graft.Main mat-bench`; BENCH.md):
-    *   - "none" (default): branch plan — tokenizer runs once per branch, each
-    *     branch shuffles only its pushed-down column/row subset;
-    *   - "cache": persist the repartitioned blocks (InMemoryRelation keeps
-    *     the url-hash partitioning, so both branches consume one exchange and
-    *     one tokenize pass); caller owns unpersist/clearCache;
-    *   - "checkpoint": localCheckpoint() — same single-pass sharing with the
-    *     lineage cut, at the cost of materializing ALL block columns.
-    * On a real cluster reading object storage the scan+decode+tokenize pass
-    * dominates, which shifts the trade toward the single-pass variants — the
-    * default stays measurement-driven per environment.
-    */
-  def extract(pages: Dataset[Page], materialize: String): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-
-    // Two consumers branch off the tokenizer output below: sentinel
-    // metadata, and block classification/assembly. Catalyst pushes each
-    // branch's filter and column set below the repartition, so the two
-    // exchange subtrees differ and the tokenizer runs once PER BRANCH.
-    // This is a measured, deliberate trade (see BASELINE.md):
-    //   - the pushed-down filters mean each branch shuffles only what it
-    //     needs (sentinels: 1 tiny row/page; classify: candidate blocks);
-    //   - a ReuseExchange formulation (non-deterministic barrier column)
-    //     defeats predicate pushdown but not column pruning, so reuse
-    //     still breaks;
-    //   - a fully fused single-exchange/no-join formulation (sentinels as
-    //     lineId=-1 rows + conditional aggregation) was implemented and
-    //     benchmarked ~2x MORE CPU: every row then rides through all four
-    //     window sorts, which costs more than the second tokenizer pass.
-    // The windows/aggs below all derive from one url-hash partitioning, so
-    // within each branch there is exactly one shuffle and the final join is
-    // co-partitioned.
-    val parted0 = blockFrame(pages).repartition(col("url"))
-    val parted = materialize match {
-      case "cache" =>
-        parted0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case "checkpoint" => parted0.localCheckpoint()
-      case _            => parted0
-    }
-
-    val sentinelFlag = (col("flags").bitwiseAND(lit(Model.FLAG_SENTINEL))) =!= 0
-    val sentinels = parted
-      .filter(sentinelFlag)
-      .select("url", "warc_ts", "lang", "kind", "nBlocks", "fullText")
-
-    val docsAssembled = assembled(lines(classifiedFrom(parted)))
-
-    val isTextKind = col("kind") === Charset.KIND_TEXT
-    val isDocKind = col("kind").isin(Charset.KIND_HTML, Charset.KIND_PDF)
-
-    sentinels
-      .join(docsAssembled, Seq("url"), "left_outer")
-      .select(
-        col("url"),
-        col("warc_ts"),
-        col("lang"),
-        when(isTextKind, col("fullText"))
-          .when(isDocKind, coalesce(col("atext"), lit("")))
-          .otherwise(lit(""))
-          .as("text"),
-        when(isTextKind && length(col("fullText")) > 0,
-          array(struct(lit(1).as("lineId"), lit(0).as("start"),
-            length(col("fullText")).as("end"), lit(0).as("sourceSeq"))))
-          .when(isDocKind,
-            coalesce(col("aspans"),
-              array().cast("array<struct<lineId:int,start:int,end:int,sourceSeq:int>>")))
-          .otherwise(array().cast("array<struct<lineId:int,start:int,end:int,sourceSeq:int>>"))
-          .as("spans"),
-        col("nBlocks"),
-        when(isDocKind, col("nBlocks") - coalesce(col("keptRows"), lit(0L)).cast("int"))
-          .otherwise(lit(0))
-          .as("nDropped"),
-        col("kind").as("contentKind")
-      )
-      .as[ExtractedDoc]
+    pages.map(ScalarExtract.extract)
   }
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * rule is two hash aggregations (line assembly keyed (url, page, y) —
   * partial-aggs map-side; chrome count keyed (url, band, tpl)) plus a
   * broadcast-sized per-doc page count. All url-local — co-partitions with
-  * the extraction pipeline's url exchange at 100 TB.
+  * the windowed extraction chain's url exchange at 100 TB.
   */
 object PdfChrome {
 

@@ -3,11 +3,13 @@ package graft.operators
 import graft.{ExtractedDoc, Page, Span}
 import graft.functions.Charset
 
-/** The sequential scalar oracle: per-document extraction as one pure function,
-  * obviously-correct reference semantics for the golden byte-identity tests
-  * (SURVEY.md §5.1). The distributed pipeline must match this byte-for-byte
-  * per url under any partitioning / AQE replan — that equality is the engine's
-  * central determinism invariant (BASELINE.json:14).
+/** Per-document extraction as one pure function: the normative semantics
+  * (SURVEY.md §5.1) and the production per-page function, run partition-locally
+  * by [[graft.operators.Extract.extract]]. The golden tests pin its bytes and
+  * assert the windowed relational chain (`Extract.classifiedBlocks` →
+  * `lines` → `assembled`) matches it per url under any partitioning / AQE
+  * replan — that equality is the engine's central determinism invariant
+  * (BASELINE.json:14).
   */
 object ScalarExtract {
 

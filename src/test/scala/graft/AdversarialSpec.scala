@@ -176,6 +176,9 @@ class AdversarialSpec extends AnyFunSuite {
       assert(d.spans == g.spans, s"$name spans")
       assert(d.contentKind == g.contentKind, s"$name kind")
     }
+    // and the windowed relational chain reproduces production on every one
+    val bad = WindowedChain.mismatches(ds.repartition(3), docs.toSeq)
+    assert(bad.isEmpty, s"windowed chain != production: ${bad.mkString("; ")}")
   }
 
   test("adversarial structure sanity: sizes, depth, pages, charsets") {

@@ -121,32 +121,44 @@ class CatalystSurfaceSpec extends AnyFunSuite {
     assert(err.getMessage.toLowerCase.contains("string"))
   }
 
-  test("extract plan shape: one url exchange per branch, filters pushed below") {
+  test("extract plan shape: one scan, zero exchanges, zero sorts") {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val dir = java.nio.file.Files.createTempDirectory("graft-extract-plan").toString
+    try {
+      import spark.implicits._
+      Corpus.pages(spark, 50).write.mode("overwrite").parquet(dir)
+      val pages = spark.read.schema(Model.PAGES).parquet(dir)
+        .filter(Extract.processable()).as[Page]
+      val plan = Extract.extract(pages).toDF().queryExecution.executedPlan.toString
+      // production is a partition-local per-page map: the pages table is
+      // scanned once and nothing is shuffled, sorted or joined
+      assert("FileScan parquet".r.findAllIn(plan).length == 1, s"expected one scan:\n$plan")
+      assert(!plan.contains("Exchange"), s"expected no exchange:\n$plan")
+      assert("Sort \\[".r.findAllIn(plan).isEmpty, s"expected no sort:\n$plan")
+      assert(!plan.contains("Join"), s"expected no join:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("windowed oracle chain plan shape: one url exchange, two sorts") {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val docs = Extract.extract(Corpus.pages(spark, 50)).toDF()
-      val plan = docs.queryExecution.executedPlan.toString
-      // two branches (sentinel metadata / classification), each with exactly
-      // one url-hash exchange whose input is already branch-filtered — the
-      // measured-cheapest shape; see the comment in Extract.extract and
-      // BASELINE.md for the evaluated single-exchange alternatives
-      val exchanges = "Exchange hashpartitioning\\(url".r.findAllIn(plan).length
-      assert(exchanges == 2, s"expected the two branch exchanges, plan:\n$plan")
-      // within each branch every window/agg reuses that branch's url
-      // partitioning — no further shuffles anywhere in the plan
+      val plan = WindowedChain.plan(Corpus.pages(spark, 50))
+        .queryExecution.executedPlan.toString
+      // every window/agg of toRows -> classifiedBlocks -> lines -> assembled
+      // reuses the one url-hash exchange of the block rows
+      val urlExchanges = "Exchange hashpartitioning\\(url".r.findAllIn(plan).length
+      assert(urlExchanges == 1, s"expected one url exchange, plan:\n$plan")
       val allExchanges = "(?<!Reused)(?<!Broadcast)Exchange ".r.findAllIn(plan).length
-      assert(allExchanges == 2, s"no shuffle beyond the two branch exchanges:\n$plan")
-      // branch filters sit BELOW the exchanges (shuffle only what's needed)
-      assert(!plan.contains("ReusedExchange"))
-      // the classify branch runs exactly TWO full-width sorts — (url,
-      // parentSeq) for the scoring windows and the materialized reading-
-      // order keys (url, ord0..ord3) for smoothing + line assembly; every
-      // other window rides one of those orderings (the keys are attribute
-      // references, so WindowExec does not inject per-node `_w` projections
-      // that would defeat ordering reuse)
+      assert(allExchanges == 1, s"no shuffle beyond the url exchange:\n$plan")
+      // exactly TWO full-width sorts — (url, parentSeq) for the scoring
+      // windows and the materialized reading-order keys (url, ord0..ord3)
+      // for smoothing + line assembly; every other window rides one of those
+      // orderings (the keys are attribute references, so WindowExec does not
+      // inject per-node `_w` projections that would defeat ordering reuse)
       val sorts = "Sort \\[".r.findAllIn(plan).length
-      assert(sorts == 2, s"expected exactly 2 sorts in the extract plan:\n$plan")
+      assert(sorts == 2, s"expected exactly 2 sorts in the windowed chain:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
@@ -539,28 +551,6 @@ class CatalystSurfaceSpec extends AnyFunSuite {
     assert(again == batch)
   }
 
-  test("extract_blocks Generator emits the same rows as the flatMap tokenizer") {
-    import spark.implicits._
-    val pages = Corpus.pages(spark, 150).cache()
-    val cols = Seq("url", "kind", "seq", "tag", "depth", "text", "textLen",
-      "linkChars", "wordCount", "parentSeq", "flags", "x", "y", "w", "h",
-      "nBlocks", "fullText")
-    val viaGen = pages.toDF()
-      .select(col("url"), graft.functions.ExtractBlocks.expr(col("html")))
-      .select(cols.map(col): _*)
-      .collect().map(_.toString).sorted.toSeq
-    val viaFlatMap = pages.flatMap(Extract.toRows).toDF()
-      .select(cols.map(col): _*)
-      .collect().map(_.toString).sorted.toSeq
-    assert(viaGen == viaFlatMap)
-    // and the physical plan uses GenerateExec
-    val plan = pages.toDF()
-      .select(col("url"), graft.functions.ExtractBlocks.expr(col("html")))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("Generate extract_blocks"))
-    pages.unpersist()
-  }
-
   test("ordered_concat Aggregator matches collect_list+array_sort assembly") {
     import spark.implicits._
     val df = Seq(
@@ -576,18 +566,6 @@ class CatalystSurfaceSpec extends AnyFunSuite {
       .orderBy("g").as[(String, String)].collect().toSeq
     assert(viaAgg == Seq(("a", "alpha beta gamma"), ("b", "one two")))
     assert(viaAgg == viaBuiltin)
-  }
-
-  test("generator-path extract is byte-identical to the flatMap-path extract") {
-    def run(): Seq[String] =
-      Extract.extract(Corpus.pages(spark, 200))
-        .collect().map(_.toString).sorted.toSeq
-    val viaFlatMap = run()
-    sys.props("graft.extract.generator") = "true"
-    try {
-      val viaGen = run()
-      assert(viaGen == viaFlatMap)
-    } finally sys.props.remove("graft.extract.generator")
   }
 
   test("driver contract: entry yields rows; every oracle key has a query") {

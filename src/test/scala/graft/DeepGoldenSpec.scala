@@ -4,8 +4,9 @@ import graft.operators.{Extract, ScalarExtract}
 import graft.sources.Corpus
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Opt-in deep golden sweep: byte-identity over a much larger slice of the
-  * corpus space than GoldenSpec's 600 docs, to shake out rare
+/** Opt-in deep golden sweep: byte-identity (production == scalar oracle ==
+  * windowed relational chain) over a much larger slice of the corpus space
+  * than GoldenSpec's 600 docs, to shake out rare
   * template × charset × lang × page-count interactions. Off by default
   * (adds minutes); enable with:
   *
@@ -18,7 +19,8 @@ class DeepGoldenSpec extends AnyFunSuite {
     val n = sys.env.get("GRAFT_DEEP").map(_.toLong).getOrElse(0L)
     assume(n > 0, "set GRAFT_DEEP=<nDocs> to run the deep sweep")
     val seed = Corpus.DEFAULT_SEED
-    val docs = Extract.extract(Corpus.pages(spark, n, seed)).collect()
+    val pages = Corpus.pages(spark, n, seed)
+    val docs = Extract.extract(pages).collect()
     assert(docs.length == n)
     var checked = 0
     docs.foreach { d =>
@@ -31,6 +33,8 @@ class DeepGoldenSpec extends AnyFunSuite {
       assert(d.nBlocks == g.nBlocks && d.nDropped == g.nDropped, s"counts ${d.url}")
       checked += 1
     }
-    info(s"deep sweep: $checked docs byte-identical")
+    val bad = WindowedChain.mismatches(pages, docs.toSeq)
+    assert(bad.isEmpty, s"${bad.size} windowed-chain mismatches, first: ${bad.take(5).mkString("; ")}")
+    info(s"deep sweep: $checked docs byte-identical, windowed chain agrees")
   }
 }

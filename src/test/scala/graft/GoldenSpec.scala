@@ -4,10 +4,10 @@ import graft.operators.{Extract, ScalarExtract}
 import graft.sources.Corpus
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine's central invariant (BASELINE.json:14): the distributed
-  * relational pipeline produces byte-identical extracted text per url to the
-  * sequential scalar oracle, for every template/charset/lang/payload
-  * combination, under any partitioning.
+/** The engine's central invariant (BASELINE.json:14): production extraction
+  * produces byte-identical text per url to the scalar oracle, and the
+  * windowed relational chain ([[WindowedChain]]) reproduces it per url for
+  * every template/charset/lang/payload combination, under any partitioning.
   */
 class GoldenSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
@@ -51,6 +51,27 @@ class GoldenSpec extends AnyFunSuite {
     assertMatches(docs)
   }
 
+  test("windowed relational chain equals production per url on the golden corpus") {
+    val pages = Corpus.pages(spark, N, seed)
+    val docs = Extract.extract(pages).collect().toSeq
+    val bad = WindowedChain.mismatches(pages, docs)
+    assert(bad.isEmpty, s"${bad.size} mismatches, first: ${bad.take(5).mkString("; ")}")
+  }
+
+  test("pages sharing a url extract one doc per page") {
+    // two recrawls of one url: different payloads, different warc_ts
+    val html = (0L until 50L).map(Corpus.page(seed, _))
+      .filter(p => graft.functions.Charset.sniffKind(p.html) == "html")
+    val url = html.head.url
+    val a = html.head
+    val b = html(1).copy(url = url,
+      warc_ts = new java.sql.Timestamp(a.warc_ts.getTime + 86400000L))
+    val docs = Extract.extract(Seq(a, b).toDS().repartition(1)).collect().toSeq
+    assert(docs.size == 2)
+    assert(docs.toSet == Set(ScalarExtract.extract(a), ScalarExtract.extract(b)))
+    assert(docs.map(_.text).distinct.size == 2, "the two payloads must stay apart")
+  }
+
   test("output invariant under repartitioning (1, 3, 16 partitions)") {
     for (p <- Seq(1, 3, 16)) {
       val pages = Corpus.pages(spark, 150L, seed).repartition(p)
@@ -58,6 +79,8 @@ class GoldenSpec extends AnyFunSuite {
       docs.foreach { d =>
         assert(d.text == scalarByUrl(d.url).text, s"parts=$p url=${d.url}")
       }
+      val bad = WindowedChain.mismatches(pages, docs)
+      assert(bad.isEmpty, s"parts=$p windowed chain: ${bad.take(5).mkString("; ")}")
     }
   }
 
@@ -68,17 +91,8 @@ class GoldenSpec extends AnyFunSuite {
       docs.foreach { d =>
         assert(d.text == scalarByUrl(d.url).text, s"salt=$salt url=${d.url}")
       }
-    }
-  }
-
-  test("materialized tokenizer variants (cache, checkpoint) are byte-identical") {
-    for (m <- Seq("cache", "checkpoint")) {
-      val docs = Extract.extract(Corpus.pages(spark, 150L, seed), m).collect().toSeq
-      assert(docs.size == 150)
-      docs.foreach { d =>
-        assert(d.text == scalarByUrl(d.url).text, s"mode=$m url=${d.url}")
-      }
-      spark.catalog.clearCache()
+      val bad = WindowedChain.mismatches(pages, docs)
+      assert(bad.isEmpty, s"salt=$salt windowed chain: ${bad.take(5).mkString("; ")}")
     }
   }
 
@@ -108,11 +122,11 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("single exchange of block rows by url (plan shape)") {
-    val docs = Extract.extract(Corpus.pages(spark, 10L, seed))
-    val plan = docs.queryExecution.executedPlan.toString
+    // the windowed chain's windows and aggregates all reuse one url-hash
+    // exchange of the block rows (AQE on, as the suite runs it)
+    val plan = WindowedChain.plan(Corpus.pages(spark, 10L, seed))
+      .queryExecution.executedPlan.toString
     val nExchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    // expected: 1 block-row exchange + 1 tiny sentinel exchange (join);
-    // anything more means a window/agg failed to reuse the url partitioning
-    assert(nExchanges <= 3, s"too many exchanges ($nExchanges):\n$plan")
+    assert(nExchanges == 1, s"expected one block-row exchange ($nExchanges):\n$plan")
   }
 }
